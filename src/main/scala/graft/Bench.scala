@@ -11,20 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ContextCleaner only reclaims shuffle files/metadata after the owning
-      // RDD is GC'd; its default periodic-GC interval is 30 min, longer than
-      // a whole bench run, so hundreds of per-query shuffles accumulate and
-      // degrade the tail of the suite. Force a driver GC every minute.
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-bench")
     // Preflight, failing LOUDLY: a setup crash must leave a parseable JSON
     // line on stdout carrying the ROOT-CAUSE class + message (round 6 died
     // in register and the artifact held only truncated inner stack frames).

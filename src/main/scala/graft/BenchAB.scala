@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Interleaved A/B bench: separates HOST DRIFT from STRUCTURAL REGRESSION.
   *
   * The round-7 closing runs (187.2 / 217.5 / 234.6 s as the catalog grew
@@ -45,7 +43,6 @@ object BenchAB {
     val priorPath = args.headOption.getOrElse("BENCH_local_r6.json")
     val outPath = if (args.length > 1) args(1) else "BENCH_AB_latest.json"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
 
     // Prior artifact: {"queries":{name:sec,...}} — parse with Spark's shaded
     // Jackson (no extra deps allowed in this build).
@@ -59,15 +56,7 @@ object BenchAB {
       b.result()
     }
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-bench-ab")
     Tables.register(spark, sfDir)
 
     val all = SparkEntry.queries

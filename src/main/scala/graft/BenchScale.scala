@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * (equi-joins, posting caps, bounded rounds) into numbers — a scale-killer
   * that slipped past the plan audits shows up here as a super-linear fit.
   *
-  * Fixture methodology (the BenchOne salted-copy convention, hardened):
+  * Fixture methodology (salted copies, as the round-5/6 scale measurements
+  * in BASELINE.md built them, hardened):
   * every copy is a DISJOINT similarity/join universe, so true-match and
   * candidate volume grow k-fold, never k^2-fold —
   *  - documents: per-copy token salt `c<copy>_<word>` (replicas share no
@@ -209,16 +210,7 @@ object BenchScale {
       case None => BenchScale.entries
       case Some(fs) => BenchScale.entries.filter(e => fs.exists(e.name.contains))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-bench-scale")
     Tables.register(spark, sfDir)
 
     val work = java.nio.file.Paths.get(

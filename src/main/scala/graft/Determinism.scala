@@ -39,10 +39,6 @@ object Determinism {
     * (name, identical?, detail). Restores the session's config after. */
   def check(spark: SparkSession, sfDir: String, names: Seq[String]): Seq[(String, Boolean, String)] = {
     val qs = SparkEntry.queries
-    // Register BEFORE perturbing: in a fresh session the first entry's own
-    // Tables.register would run doRegister, which force-sets the session
-    // posture (AQE on) and would silently undo the AQE-off half of run A
-    // for that entry — weakening exactly the gate this harness is.
     Tables.register(spark, sfDir)
     val conf = spark.conf
     val keepParts = conf.get("spark.sql.shuffle.partitions")
@@ -91,13 +87,7 @@ object Determinism {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val filters = if (args.length > 1) args(1).split(',').toSeq else Seq("")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-determinism")
     val names = batchNames.filter(n => filters.exists(n.contains)).sorted
     val results = check(spark, sfDir, names)
     results.foreach { case (n, ok, d) =>

@@ -1,35 +1,17 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-
-import graft.functions.{CosineSimilarity, DotProduct}
 
 /** SparkSessionExtensions entry point — enable with
   * `spark.sql.extensions=graft.GraftExtensions` to get the engine's native
-  * functions in any session at build time (the runtime path is
-  * `CosineSimilarity.register(spark)` / `DotProduct.register(spark)`, done
-  * by Tables.register), plus the binned-range-join optimizer rule
-  * (inert until `spark.graft.rangeJoin.binWidth` is set). */
+  * functions, the as-of join strategy and the binned-range-join optimizer
+  * rule (inert until `spark.graft.rangeJoin.binWidth` is set) at session
+  * build. It injects the same [[Session.functions]] list the runtime path
+  * ([[Session.install]]) registers, so the two cannot drift. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => graft.plans.BinnedRangeJoinRule)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("cosine_similarity"),
-      CosineSimilarity.info,
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CosineSimilarity(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      DotProduct.info,
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProduct(children.head, children(1))))
-    // lsh_codes carries literal shape args; reuse the runtime builder's
-    // validation by registering through the same construction path.
-    ext.injectFunction((
-      FunctionIdentifier("lsh_codes"),
-      graft.functions.LshCodes.info,
-      graft.functions.LshCodes.builder))
+    Session.functions.foreach(ext.injectFunction)
   }
 }

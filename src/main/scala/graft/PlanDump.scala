@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` output for catalog queries to files —
   * the optimization-round evidence trail (plans/r14/<name>_before.txt /
   * _after.txt). Usage: PlanDump <sfDir> <outDir> <suffix> [nameFilter]
@@ -17,15 +15,7 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val filters = if (args.length > 3) args(3).split(',').toSeq else Seq("")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-plan-dump")
     Tables.register(spark, sfDir)
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.queries.foreach { case (name, fn) =>

@@ -496,7 +496,8 @@ object Queries {
     //      alternative formulation (one distinct-gram array per doc, join on
     //      adjacent id, array_intersect per pair) shuffles fewer rows but
     //      measured ~20% slower at sf0.1 — codegen'd hash agg absorbs the
-    //      row volume; see BenchOne `ngram_explode_vs_array`. ----
+    //      row volume (round 6, BASELINE.md: 4.5 s exploded vs 6.1 s
+    //      arrays, sf0.1 warm). ----
     // q46_ngram_jaccard moved to pipeline/Ext.scala (round 14 optimization):
     // the one-statement form re-executed the `ds` char-trigram explode three
     // times (sizes + both self-join sides shuffle on different keys, so no
@@ -613,7 +614,8 @@ object Queries {
     // norms hoisted: SQRT(dot(x,x)) once per VECTOR, then one dot_product
     // per PAIR — a third of the per-pair arithmetic of a fused cosine
     // (neutral at 64-dim where pair iteration dominates, and an increasing
-    // win as dimensionality grows; see BenchOne dot_hoist_vs_fused)
+    // win as dimensionality grows; round 3 measured the two converging at
+    // 64-dim, BASELINE.md)
     // SCALE-AUDIT: q72_embedding_neardup -> q72b_embedding_neardup_scaled
     q2("q72_embedding_neardup",
       // REPARTITION(__NP__, vec_id): the BNLJ streams its probe side out of
@@ -7225,37 +7227,25 @@ object Queries {
     // round twice — top-1 pick and min-dist update — so the tree doubles
     // per round); the Ext implementation materializes each round once with
     // an eager localCheckpoint, identical integer arithmetic, same DuckDB
-    // oracle (fpsSql(duck = true) below).
+    // oracle (fpsSql below).
   )
 
-  /** Unrolled farthest-point-sampling rounds (q395) in either dialect —
-    * seed = vec_id 0, `rounds` further selections, incremental min-dist.
-    * The duck side remains q395's oracle (Ext.oracles); the spark side is
-    * retained for the BenchOne A/B harness. */
-  private[graft] def fpsSql(duck: Boolean, rounds: Int = 7): String = {
+  /** q395's DuckDB oracle (Ext.oracles): unrolled farthest-point-sampling
+    * rounds — seed = vec_id 0, `rounds` further selections, incremental
+    * min-dist. */
+  private[graft] def fpsSql(rounds: Int = 7): String = {
     def d2(a: String, b: String): String =
-      if (duck)
-        s"CAST(list_sum(list_transform(range(1, len($a) + 1), j -> ($a[j] - $b[j]) * ($a[j] - $b[j]))) AS BIGINT)"
-      else
-        s"aggregate(zip_with($a, $b, (x, y) -> (x - y) * (x - y)), CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    val quant =
-      if (duck) "list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT))"
-      else "transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT))"
+      s"CAST(list_sum(list_transform(range(1, len($a) + 1), j -> ($a[j] - $b[j]) * ($a[j] - $b[j]))) AS BIGINT)"
     val ctes = Seq(
-      s"e AS (SELECT vec_id, $quant AS q FROM embeddings)",
+      "e AS (SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT)) AS q FROM embeddings)",
       "s0 AS (SELECT q AS sq FROM e WHERE vec_id = 0)",
-      // The 1-row selected-vector side must BROADCAST (hinted in the Spark
-      // dialect): post-join CTEs carry no row-count stats, so without the
-      // hint Spark falls back to CartesianProductExec — same result, but a
-      // full-shuffle all-pairs operator instead of a map-side pass.
-      s"m0 AS (SELECT${if (duck) "" else " /*+ BROADCAST(s0) */"} e.vec_id, e.q, " +
-        s"${d2("e.q", "s0.sq")} AS md FROM e CROSS JOIN s0)") ++
+      s"m0 AS (SELECT e.vec_id, e.q, ${d2("e.q", "s0.sq")} AS md FROM e CROSS JOIN s0)") ++
       (1 to rounds).flatMap { r =>
         Seq(
           s"p$r AS (SELECT vec_id, md FROM m${r - 1} ORDER BY md DESC, vec_id LIMIT 1)",
           s"s$r AS (SELECT e.q AS sq FROM e JOIN p$r ON e.vec_id = p$r.vec_id)") ++
           (if (r < rounds)
-             Seq(s"m$r AS (SELECT${if (duck) "" else " /*+ BROADCAST(s) */"} m.vec_id, m.q, " +
+             Seq(s"m$r AS (SELECT m.vec_id, m.q, " +
                s"LEAST(m.md, ${d2("m.q", "s.sq")}) AS md " +
                s"FROM m${r - 1} m CROSS JOIN s$r s)")
            else Nil)

@@ -114,7 +114,7 @@ object Tables {
     * TimestampType (branched on the file's ACTUAL physical type; a column
     * already TimestampType passes through untouched). ns-long fixtures
     * additionally require `spark.sql.legacy.parquet.nanosAsLong` on the
-    * session (set once in [[register]]'s critical section). */
+    * session (set by [[Session.install]]). */
   def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
     timeColumns.getOrElse(name, Nil).foldLeft(df) { (d, c) =>
@@ -123,21 +123,9 @@ object Tables {
   }
 
   private def doRegister(spark: SparkSession, dir: String): Unit = {
-    // Session posture for a large cluster: AQE on (runtime join re-plan,
-    // skew handling, partition coalescing); UTC for oracle parity.
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // ns-parquet read mode: session-level, set once here (inside register's
-    // lock) rather than on every read() call.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Engine-native functions, registered at runtime so driver-provided
-    // sessions (no spark.sql.extensions) get them too.
-    graft.functions.CosineSimilarity.register(spark)
-    graft.functions.DotProduct.register(spark)
-    graft.functions.LshCodes.register(spark)
-    graft.functions.BloomFns.register(spark)
-    graft.functions.KmvSketchAgg.register(spark)
-    graft.functions.CmsSketchAgg.register(spark)
+    // Driver-provided sessions (not built by Session.local) get the engine's
+    // functions, strategy, rule and session posture here.
+    Session.install(spark)
 
     // Per-table isolation (round-6 lesson): one unreadable table must not
     // take down queries that never touch it. A failing table is skipped with

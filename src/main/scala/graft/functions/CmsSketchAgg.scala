@@ -154,9 +154,4 @@ object CmsSketchAgg {
     }
     CmsSketchAgg(children.head, intLit(children(1), "d"), intLit(children(2), "w"))
   }
-
-  /** Runtime registration on any session (the Tables.register path). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("cms_agg"), info, builder)
 }

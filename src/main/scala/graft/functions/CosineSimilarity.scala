@@ -12,9 +12,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * `aggregate(zip_with(...))` higher-order-function formulation (which stays
   * as the portable SQL baseline in Queries.q48). At 100 TB the scoring loop
   * dominates ANN cost, so this is the custom-Expression case of the
-  * built-in < Expression < UDF preference order. Measured (BenchOne
-  * cosine_native_vs_hof, 250k scorings of 64-dim vectors, warm): native
-  * 0.31 s vs HOF 2.9 s — ~9x.
+  * built-in < Expression < UDF preference order. Measured in round 2
+  * (BASELINE.md; 250k scorings of 64-dim vectors, warm): native 0.31 s vs
+  * HOF 2.9 s — ~9x.
   *
   * Returns null for null/length-mismatched inputs or zero-norm vectors.
   */
@@ -105,12 +105,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
 object CosineSimilarity {
   val info: ExpressionInfo = new ExpressionInfo(
     classOf[CosineSimilarity].getCanonicalName, "cosine_similarity")
-
-  /** Runtime registration on any session (works on driver-provided sessions
-    * where spark.sql.extensions can no longer be set). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_similarity"),
-      info,
-      (children: Seq[Expression]) => CosineSimilarity(children.head, children(1)))
 }

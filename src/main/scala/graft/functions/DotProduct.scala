@@ -90,12 +90,4 @@ case class DotProduct(left: Expression, right: Expression)
 object DotProduct {
   val info: ExpressionInfo = new ExpressionInfo(
     classOf[DotProduct].getCanonicalName, "dot_product")
-
-  /** Runtime registration on any session (works on driver-provided sessions
-    * where spark.sql.extensions can no longer be set). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("dot_product"),
-      info,
-      (children: Seq[Expression]) => DotProduct(children.head, children(1)))
 }

@@ -146,9 +146,4 @@ object KmvSketchAgg {
     }
     KmvSketchAgg(children.head, k)
   }
-
-  /** Runtime registration on any session (the Tables.register path). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("kmv_agg"), info, builder)
 }

@@ -129,9 +129,4 @@ object LshCodes {
       intArg(children(2), "tables"), intArg(children(3), "bits"),
       intArg(children(4), "dim"))
   }
-
-  /** Runtime registration on any session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("lsh_codes"), info, builder)
 }

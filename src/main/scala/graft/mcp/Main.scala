@@ -2,8 +2,6 @@ package graft.mcp
 
 import java.io.BufferedReader
 
-import org.apache.spark.sql.SparkSession
-
 /** Parsed launch options: `dataDir` already has CLI-over-env precedence
   * applied (the reference's rule — entrypoint CLI args beat env vars,
   * /root/reference/images/snowflake-mcp/entrypoint.sh:104-190). */
@@ -88,19 +86,10 @@ object Main {
     val toolsFile = launch.toolsFile
     val dataDir = launch.dataDir
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-mcp")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Defense in depth behind StatementGate's file-source deny: even if a
-      // file-backed relation slipped the parse-level gate, analysis refuses it.
-      .config("spark.sql.runSQLOnFiles", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("graft-mcp")
+    // Defense in depth behind StatementGate's file-source deny: even if a
+    // file-backed relation slipped the parse-level gate, analysis refuses it.
+    spark.conf.set("spark.sql.runSQLOnFiles", "false")
 
     val config = toolsFile.map(Config.loadFile).getOrElse(ToolboxConfig(Nil, Nil))
     dataDir.foreach(d => graft.Tables.register(spark, d))

@@ -414,17 +414,11 @@ object Dedup {
       minJaccard: Double = 0.5): DataFrame = {
     Tables.register(spark, dir)
     val sh = shingles(spark.table("documents"))
-    incrementalNearDupFrom(sh,
-      bandsOf(sh.where(col("doc_id") % 10 === 0)),
-      bandsOf(sh.where(col("doc_id") % 10 =!= 0)), minJaccard)
-  }
-
-  /** Core of the incremental path with the signature inputs explicit, so
-    * the scale harness (BenchOne incremental_scale) can pre-materialize the
-    * corpus bands — in production they are READ from the signature store,
-    * not recomputed per batch. */
-  private[graft] def incrementalNearDupFrom(sh: DataFrame, batchBands: DataFrame,
-      corpusBands: DataFrame, minJaccard: Double): DataFrame = {
+    val batchBands = bandsOf(sh.where(col("doc_id") % 10 === 0))
+    // In production the corpus bands are READ from the signature store, not
+    // recomputed per batch; round 6 measured that shape at 100k docs as
+    // 3.8 s incremental vs 7.6 s full re-dedup (BASELINE.md).
+    val corpusBands = bandsOf(sh.where(col("doc_id") % 10 =!= 0))
     val crossCand = batchBands.as("a")
       .join(corpusBands.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))

@@ -90,9 +90,9 @@ object Ops {
     * (plans/AsOfJoinExec — LogicalPlan + SparkStrategy + SparkPlan): same
     * semantics and same shuffle envelope as [[asofJoin]], but a single
     * streaming merge pass instead of union widening + window buffering.
-    * The strategy self-registers on the session (idempotent) so
-    * driver-provided plain sessions work; build-time injection is also
-    * available via GraftExtensions. The right side is re-aliased so a
+    * The strategy is installed on the session (idempotent,
+    * [[graft.Session.install]]) so driver-provided plain sessions work.
+    * The right side is re-aliased so a
     * self-join (both sides from one table) can't leak duplicate
     * attribute ids into the custom node. */
   def asofJoinNative(
@@ -104,9 +104,7 @@ object Ops {
     require(payloadCols.forall(!left.columns.contains(_)),
       s"payload columns ${payloadCols.filter(left.columns.contains(_))} collide with left-side columns")
     val spark = left.sparkSession
-    val exp = spark.experimental
-    if (!exp.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ graft.plans.AsOfJoinStrategy
+    graft.Session.install(spark)
     val rFresh = right.select(right.columns.map(c => col(c).as(c)).toSeq: _*)
     val plan = graft.plans.AsOfJoinPlan(
       left.queryExecution.analyzed, rFresh.queryExecution.analyzed,
@@ -247,14 +245,6 @@ object Ops {
       (0 until bits).map(i =>
         shiftleft(shiftright(c, i).bitwiseAND(lit(1L)), i * n + d))
     }.reduce(_ bitwiseOR _)
-  }
-
-  /** (profiling seam) the z-valued frame for given boundary sets. */
-  private[graft] def zorderFrame(df: DataFrame, dims: Seq[String],
-      qs: Array[Array[Double]]): DataFrame = {
-    val z = interleaveBits(
-      dims.zip(qs).map { case (d, q) => bucketByQuantiles(col(d), q) }, bits = 8)
-    df.withColumn("__z", z)
   }
 
   /** Rank bucketing into [0, 2^bits): the bucket is the count of quantile

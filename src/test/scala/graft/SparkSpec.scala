@@ -6,19 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local session for the whole test run (sessions are expensive). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    // A throwaway warehouse, removed when the test JVM exits. The warehouse
+    // dir is a static conf, so it goes in as a `spark.*` system property,
+    // which the session's SparkConf reads at build.
+    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(wh))
+    sys.props("spark.sql.warehouse.dir") = wh.toString
+    Session.local("graft-test", cpus = 4)
   }
   val sfDir = "/root/testdata/sf0.001"
 }

@@ -42,7 +42,8 @@ def server_cmd(*extra):
 
 def spawn(*extra, env_overrides=None, drop_env=()):
     env = {k: v for k, v in os.environ.items() if k not in drop_env}
-    env.setdefault("SPARK_GRAFT_SF_DIR", DATA_DIR)
+    if "SPARK_GRAFT_SF_DIR" not in drop_env:
+        env.setdefault("SPARK_GRAFT_SF_DIR", DATA_DIR)
     env.setdefault("SPARK_GRAFT_CPUS", "4")
     env.update(env_overrides or {})
     return subprocess.Popen(
@@ -278,6 +279,34 @@ def test_media_dedup_pipeline_tool(initialized):
         "id": 16})
     assert bad["result"].get("isError") is True
     assert "modality" in bad["result"]["content"][0]["text"]
+
+
+def test_native_functions_without_data_dir():
+    """A server started with only --stdio (no --data-dir, no dataset-dir
+    source, so Tables.register never runs) still resolves the engine's
+    native SQL functions: the session factory installs them."""
+    process = spawn(drop_env=("SPARK_GRAFT_SF_DIR",))
+    try:
+        rpc_roundtrip(process, {
+            "jsonrpc": "2.0", "method": "initialize",
+            "params": {"protocolVersion": "1.0.0", "capabilities": {},
+                       "clientInfo": {"name": "test-client", "version": "1.0.0"}},
+            "id": 1})
+        one = "array(CAST(1 AS FLOAT), CAST(0 AS FLOAT))"
+        resp = rpc_roundtrip(process, {
+            "jsonrpc": "2.0", "method": "tools/call",
+            "params": {"name": "execute_sql",
+                       "arguments": {"sql": f"SELECT cosine_similarity({one}, {one}) AS c"}},
+            "id": 2})
+        assert "result" in resp and not resp["result"].get("isError", False), resp
+        rows = [json.loads(c["text"]) for c in resp["result"]["content"]]
+        assert rows == [{"c": 1.0}], rows
+    finally:
+        process.terminate()
+        try:
+            process.wait(timeout=10)
+        except subprocess.TimeoutExpired:
+            process.kill()
 
 
 # ============================================================================
