@@ -33,6 +33,10 @@ import org.apache.spark.sql.functions._
   * times are compared on identically-shaped rows and only SIZE varies.
   * Scaled tables are materialized to parquet once per size — generation cost
   * is never inside a timing window.
+  *
+  * The recorded runs (BENCH_SCALE_r10..r15.json) and the bounds calibrated
+  * on them ran at `local[32]`; a gate run sets `SPARK_GRAFT_CPUS=32` to
+  * compare against them (unset, the session takes every core of the host).
   */
 object BenchScale {
 

@@ -8,7 +8,8 @@ import java.nio.file.{Files, Paths}
   * where nameFilter is comma-separated substrings (empty/absent = all).
   * Entries that eagerly execute at construction (localCheckpoint pipelines)
   * still yield their final-plan explain; AQE initial plans are marked
-  * isFinalPlan=false by Spark itself. */
+  * isFinalPlan=false by Spark itself. The recorded plans were dumped at
+  * `SPARK_GRAFT_CPUS=32`; set it to match their shuffle partition counts. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)

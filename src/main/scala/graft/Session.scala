@@ -11,14 +11,13 @@ import graft.functions.{CmsSketchAgg, CosineSimilarity, DotProduct, KmvSketchAgg
 /** The engine's one session factory ([[local]]) and its one registration
   * path ([[install]]). Every main, the MCP server and the test session
   * build through [[local]]; driver-provided sessions get the same engine
-  * through `Tables.register`, which calls [[install]]; `GraftExtensions`
-  * injects the same [[functions]] list at build time. So benched,
+  * through `Tables.register`, which calls [[install]]. So benched,
   * verified, served and tested plans all see one optimizer, one strategy
   * set and one function registry. */
 object Session {
 
   /** Every engine-native SQL function, as `(name, info, builder)`. */
-  val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+  private val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
     fn("cosine_similarity", CosineSimilarity.info, c => CosineSimilarity(c.head, c(1))),
     fn("dot_product", DotProduct.info, c => DotProduct(c.head, c(1))),
     fn("lsh_codes", LshCodes.info, LshCodes.builder),
@@ -50,9 +49,11 @@ object Session {
   private def fn(name: String, info: ExpressionInfo, build: Seq[Expression] => Expression) =
     (FunctionIdentifier(name), info, build)
 
-  /** A local-mode session with the engine's settings, [[install]]ed.
-    * `cpus` defaults to `SPARK_GRAFT_CPUS`, else every core of the host. */
-  def local(appName: String, cpus: Int = defaultCpus): SparkSession = {
+  /** A local-mode session with the engine's settings, [[install]]ed, on
+    * `SPARK_GRAFT_CPUS` cores (default: every core of the host). */
+  def local(appName: String): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
@@ -71,15 +72,11 @@ object Session {
     spark
   }
 
-  private def defaultCpus: Int =
-    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors())
-
   /** Idempotent: registers [[functions]] (a name the session already
-    * resolves is left alone), adds the as-of join strategy and the
+    * resolves is left alone) and adds the as-of join strategy and the
     * binned-range-join rule (inert until `spark.graft.rangeJoin.binWidth` is
-    * set), and sets the session posture — UTC for oracle parity, and
-    * ns-parquet timestamps read as longs (`Tables.asTimestamp` converts
-    * them). Synchronized: concurrent callers share one `experimental`. */
+    * set). Sets no conf, so a caller's session settings stay its own.
+    * Synchronized: concurrent callers share one `experimental`. */
   def install(spark: SparkSession): Unit = synchronized {
     val reg = spark.sessionState.functionRegistry
     functions.foreach { case (id, info, build) =>
@@ -90,7 +87,5 @@ object Session {
       exp.extraStrategies = exp.extraStrategies :+ graft.plans.AsOfJoinStrategy
     if (!exp.extraOptimizations.contains(graft.plans.BinnedRangeJoinRule))
       exp.extraOptimizations = exp.extraOptimizations :+ graft.plans.BinnedRangeJoinRule
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
   }
 }

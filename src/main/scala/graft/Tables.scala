@@ -114,7 +114,7 @@ object Tables {
     * TimestampType (branched on the file's ACTUAL physical type; a column
     * already TimestampType passes through untouched). ns-long fixtures
     * additionally require `spark.sql.legacy.parquet.nanosAsLong` on the
-    * session (set by [[Session.install]]). */
+    * session (set once in [[register]]'s critical section). */
   def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
     timeColumns.getOrElse(name, Nil).foldLeft(df) { (d, c) =>
@@ -123,8 +123,12 @@ object Tables {
   }
 
   private def doRegister(spark: SparkSession, dir: String): Unit = {
+    // UTC for oracle parity; ns-parquet read mode, set once here (inside
+    // register's lock) rather than on every read() call.
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Driver-provided sessions (not built by Session.local) get the engine's
-    // functions, strategy, rule and session posture here.
+    // functions, strategy and rule here.
     Session.install(spark)
 
     // Per-table isolation (round-6 lesson): one unreadable table must not

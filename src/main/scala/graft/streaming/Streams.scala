@@ -141,7 +141,7 @@ object Streams {
   /** Streaming drain over the EVENTS file with the normalized ts column. */
   private def drainEvents(spark: SparkSession, dir: String, mode: String)(
       xform: DataFrame => DataFrame): DataFrame = {
-    Tables.register(spark, dir) // session posture (nanosAsLong, UTC, AQE)
+    Tables.register(spark, dir) // session posture (nanosAsLong, UTC) + table views
     val schema = Tables.eventsRaw(spark, dir).schema // physical ts type varies by fixture vintage
     // FileStreamSource wants a directory; select just the events file from
     // the shared testdata dir with a glob filter.

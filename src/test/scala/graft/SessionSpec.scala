@@ -26,7 +26,6 @@ class SessionSpec extends SparkSpec {
   test("Tables.register on a new session resolves all seven native functions") {
     val names = Seq("cosine_similarity", "dot_product", "lsh_codes",
       "bloom_filter_agg", "might_contain", "kmv_agg", "cms_agg")
-    assert(Session.functions.map(_._1.funcName).sorted == names.sorted)
     names.foreach(n => assert(fresh.catalog.functionExists(n), s"$n does not resolve"))
     val one = "array(CAST(1 AS FLOAT), CAST(0 AS FLOAT))"
     val c = fresh.sql(s"SELECT cosine_similarity($one, $one), dot_product($one, $one)").head()

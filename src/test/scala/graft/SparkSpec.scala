@@ -12,7 +12,7 @@ object TestSpark {
     val wh = java.nio.file.Files.createTempDirectory("graft_wh").toFile
     sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(wh))
     sys.props("spark.sql.warehouse.dir") = wh.toString
-    Session.local("graft-test", cpus = 4)
+    Session.local("graft-test") // SPARK_GRAFT_CPUS=4: build.sbt Test / envVars
   }
   val sfDir = "/root/testdata/sf0.001"
 }
